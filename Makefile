@@ -7,7 +7,7 @@ SF001 := /root/testdata/sf0.001
 SF01  := /root/testdata/sf0.01
 SF01DIR ?= $(SF01)
 
-.PHONY: test selfcheck selfcheck-sf001 plan-audit bench round-close
+.PHONY: test selfcheck selfcheck-sf001 plan-audit bench perfbench round-close
 
 test:
 	python -m pytest tests/ -q
@@ -25,6 +25,12 @@ plan-audit:
 # contended flag) — check `uptime` is < 0.5 before trusting the numbers.
 bench:
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+
+# The repo benchmark (perfbench/NOTES.md): its own tests, then one traced
+# sync_resync run that prints the per-layer metrics.
+perfbench:
+	python3 -m pytest perfbench -q -p no:cacheprovider
+	python3 perfbench/run.py --workload sync_resync --seed 1 --seconds 10 --trace 1
 
 # Close out a round: all gates, then stage EVERYTHING (including driver
 # artifacts like BENCH_r*.json / CORRECTNESS_r*.json that appeared since

@@ -18,8 +18,3 @@ def stable_round(col: Column, p: int) -> Column:
     """
     s = float(10**p)
     return F.floor(col * s + 0.5) / s
-
-
-def sround_sql(expr: str, p: int) -> str:
-    """The DuckDB-side mirror of :func:`stable_round`."""
-    return f"FLOOR(({expr})*1e{p} + 0.5)/1e{p}"

@@ -1,9 +1,8 @@
 """String / date / misc scalar helpers (F14-F19, SURVEY.md §2.8).
 
 All native Column expressions; each mirrors a scattered string operation in
-the reference (quote stripping :191-193, SQL-escape :271, double-space
-collapse :702, case mapping :354/:293, bytes decode :271 etc., date
-formatting :614/:794, split/concat :252-255/:387).
+the reference (quote stripping :191-193, double-space collapse :702, case
+mapping :354/:293, bytes decode :271 etc., system-URL concat :387).
 """
 
 from __future__ import annotations
@@ -15,12 +14,6 @@ from pyspark.sql import functions as F
 def strip_quotes(col: Column) -> Column:
     """F14 — replace('"','') on code-table rows (cnics_to_fhir.py:191-193)."""
     return F.regexp_replace(col, '"', "")
-
-
-def sql_escape_quotes(col: Column) -> Column:
-    """F14 — replace("'","''") (cnics_to_fhir.py:271); only needed if the
-    engine ever re-emits SQL text (JDBC pushdown handles quoting itself)."""
-    return F.regexp_replace(col, "'", "''")
 
 
 def collapse_double_spaces(col: Column) -> Column:
@@ -38,18 +31,8 @@ def decode_utf8(col: Column) -> Column:
     return F.decode(col, "UTF-8")
 
 
-def ymd(col: Column) -> Column:
-    """F17 — strftime('%Y-%m-%d') (cnics_to_fhir.py:614, :794)."""
-    return F.date_format(col, "yyyy-MM-dd")
-
-
 def identifier_system(base: str, site: Column) -> Column:
     """F19 — system-URL concatenation, e.g.
     'https://cnics.cirg.washington.edu/site-patient-id/' + site.lower()
     (cnics_to_fhir.py:387, :393, :623, :706, :891)."""
     return F.concat(F.lit(base), F.lower(site))
-
-
-def split_job_spec(col: Column) -> Column:
-    """F19 — the ':'-separated job/worklist lines (cnics_to_fhir.py:252-255, :286)."""
-    return F.split(col, ":")

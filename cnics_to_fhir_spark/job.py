@@ -7,8 +7,9 @@ writer in one batched pass and the counters come from the plan itself.
 re-GETs its server id before building subject references
 (cnics_to_fhir.py:530-539). Bulk mode resolves ids from the snapshot join
 instead; patients not yet in the store get a deterministic placeholder
-reference (``urn:pending:<SitePatientId>``) that the writer rewrites after
-the Patient insert wave — documented divergence, same end state.
+reference (``urn:pending:<SitePatientId>``). The writer sends it as is; the
+next re-sync, whose snapshot holds the inserted Patient, resolves it to the
+server id — documented divergence, same end state after one more pass.
 """
 
 from __future__ import annotations

@@ -159,10 +159,12 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     With ``conditional_create=False``, ``batch`` bundles are NOT safe
     under Spark task retry (already-applied POSTs duplicate server-side)
     — only disable it against a store that rejects ifNoneExist.
-    Accumulator caveat: counters are task-lifetime totals, so a retried
-    task re-counts its successful entries; treat counts as at-least-once
-    telemetry (the authoritative per-action counts come from
-    ``action_counts`` over the plan itself).
+    Accumulator caveat: Spark drops accumulator updates from failed task
+    attempts, so only the winning attempt of a task counts. Rows a failed
+    attempt already sent never show up, and ``failed`` reads 0 after a
+    retried failure (ROADMAP item 3 tracks honest counters). The
+    authoritative per-action counts come from ``action_counts`` over the
+    plan itself.
     Returns {action: count} gathered via accumulators.
     """
     sc = plan.sparkSession.sparkContext

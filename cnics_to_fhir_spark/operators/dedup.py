@@ -260,12 +260,6 @@ def portable_hash(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signature(text: Column, num_hashes: int = 32, k: int = 3) -> Column:
-    """array<long> MinHash signature: sig[j] = min over shingles of
-    xxhash64(j, shingle). Pure codegen — no UDF, no shuffle."""
-    return minhash_from_shingles(F.array_distinct(word_shingles(text, k)), num_hashes)
-
-
 def _min_hash_at(shingles: Column, j: int, portable: bool) -> Column:
     """min over shingles of hash_j(shingle), with ``j`` captured by a real
     closure. NEVER write ``lambda s, j=j: ...`` here: pyspark's transform

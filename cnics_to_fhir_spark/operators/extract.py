@@ -45,7 +45,7 @@ def patient_page(
     patient identity page (PatientId, SitePatientId, Site)."""
     base = (
         patient.filter(F.col("Site") == site)
-        .join(demographic.select("PatientId").distinct(), "PatientId", "inner")
+        .join(demographic.select("PatientId"), "PatientId", "left_semi")
         .select("PatientId", F.decode("SitePatientId", "UTF-8").alias("SitePatientId"), "Site")
     )
     if randomize:

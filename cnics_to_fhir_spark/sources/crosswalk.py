@@ -84,9 +84,3 @@ def load_crosswalk(spark: SparkSession, path: str) -> DataFrame:
         unconditional=["hmrn"],
         non_null_literal=["umrn"],
     ).select("SitePatientId", "hmrn", "umrn")
-
-
-def attach_mrns(patients: DataFrame, crosswalk: DataFrame, key: str = "SitePatientId") -> DataFrame:
-    """J4 — broadcast left join replacing the per-row dict probe
-    (cnics_to_fhir.py:398-408)."""
-    return patients.join(F.broadcast(crosswalk), on=key, how="left")

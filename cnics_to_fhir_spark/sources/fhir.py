@@ -9,7 +9,9 @@ Two paths:
 - ``snapshot_from_bundles``: parse FHIR search-set Bundle JSON documents
   (from files/exports/fixtures) — pure from_json/explode, fully columnar.
 - ``snapshot_via_http``: partition-parallel GET with pagination via
-  mapInPandas (requests gated behind import-try; the 50000-`_count`
+  mapInPandas, one task per shard with no shuffle; each page is parsed once
+  by :func:`walk_snapshot`, which also backs the ``fhir_snapshot`` data
+  source (requests gated behind import-try; the 50000-`_count`
   no-pagination hack at cnics_to_fhir.py:215-217 becomes real paging).
 """
 
@@ -20,6 +22,12 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from cnics_to_fhir_spark.schemas import FHIR_SNAPSHOT
+
+# FHIR_SNAPSHOT with every column nullable, as the from_json parse of
+# snapshot_from_bundles yields it: an entry without a resource is a NULL row.
+SNAPSHOT_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in FHIR_SNAPSHOT])
 
 # Only the fields reconciliation consumes (identifier[0] + id + subject),
 # mirroring FIXTURES.md §4. Everything else in the bundle is pruned at parse.
@@ -76,15 +84,16 @@ def snapshot_from_bundles(bundles: DataFrame, json_col: str = "bundle_json") -> 
     :652, :736); ``has_identifier`` records whether the array existed at all
     (the guard Condition/Observation have but MedicationRequest lacks —
     :555 vs :652; the engine applies the guard uniformly and documents the
-    divergence)."""
+    divergence). An empty ``identifier`` list gives NULL system and value
+    (``get`` tolerates the missing index that ``[0]`` rejects under ANSI)."""
     parsed = bundles.select(F.from_json(F.col(json_col), BUNDLE_SCHEMA).alias("b"))
     entries = parsed.select(F.explode("b.entry").alias("e")).select("e.resource.*")
     return entries.select(
         F.col("resourceType").alias("resource_type"),
         F.col("id"),
         F.col("subject.reference").alias("subject_ref"),
-        F.col("identifier").getItem(0).getField("system").alias("identifier_0_system"),
-        F.col("identifier").getItem(0).getField("value").alias("identifier_0_value"),
+        F.get("identifier", 0).getField("system").alias("identifier_0_system"),
+        F.get("identifier", 0).getField("value").alias("identifier_0_value"),
         F.col("identifier").isNotNull().alias("has_identifier"),
     )
 
@@ -114,6 +123,56 @@ def site_shards(sites: list[str], system: str) -> list[str]:
     return [f"identifier={system}%7C{site}*" for site in sites]
 
 
+def http_session(headers: dict[str, str] | None = None):
+    """A ``requests.Session`` for the snapshot readers. The import is
+    deferred to the executor so environments without ``requests`` can still
+    use the bundle path."""
+    try:
+        import requests
+    except ImportError as e:  # pragma: no cover
+        raise NotImplementedError(
+            "FHIR snapshot reads need the 'requests' package on executors; "
+            "use snapshot_from_bundles over an exported bundle instead"
+        ) from e
+    session = requests.Session()
+    if headers:
+        session.headers.update(headers)
+    return session
+
+
+def walk_snapshot(session, url: str, max_pages: int) -> Iterator[tuple]:
+    """Walk one search's ``next``-link chain from ``url`` (at most
+    ``max_pages`` pages) and yield one FHIR_SNAPSHOT row per entry, in
+    ``SNAPSHOT_SCHEMA`` column order, plus ``meta.lastUpdated`` last.
+
+    Each page is parsed once, by ``resp.json()``. The row rules are those of
+    :func:`snapshot_from_bundles`: only ``identifier[0]`` is surfaced, and
+    ``has_identifier`` means the array exists (an empty one counts)."""
+    pages = 0
+    while url and pages < max_pages:
+        resp = session.get(url)
+        resp.raise_for_status()
+        bundle = resp.json()
+        for entry in bundle.get("entry") or []:
+            r = entry.get("resource") or {}
+            ident = r.get("identifier")
+            first = ident[0] if ident else {}
+            yield (
+                r.get("resourceType"),
+                r.get("id"),
+                (r.get("subject") or {}).get("reference"),
+                first.get("system"),
+                first.get("value"),
+                ident is not None,
+                (r.get("meta") or {}).get("lastUpdated"),
+            )
+        pages += 1
+        url = next(
+            (link.get("url") for link in bundle.get("link") or [] if link.get("relation") == "next"),
+            None,
+        )
+
+
 def snapshot_via_http(
     spark: SparkSession,
     base_url: str,
@@ -124,9 +183,11 @@ def snapshot_via_http(
     shards: list[str] | None = None,
     trace_tasks: bool = False,
 ) -> DataFrame:
-    """Partition-parallel paged GET → FHIR_SNAPSHOT. Requires ``requests``
-    at runtime on executors; import is deferred so environments without it
-    can still use the bundle path.
+    """Partition-parallel paged GET → FHIR_SNAPSHOT, in one stage: the
+    shard URLs are seeded one per RDD slice (no shuffle), and each task
+    walks its chain with :func:`walk_snapshot`, emitting snapshot rows
+    straight from the parsed pages. Requires ``requests`` at runtime on
+    executors.
 
     ``shards`` is a list of FHIR search-fragment strings whose result sets
     partition the corpus (build with :func:`lastupdated_shards` /
@@ -138,25 +199,15 @@ def snapshot_via_http(
     for small stores only)."""
     base = f"{base_url}/{resource_type}?_format=json&_count={page_size}"
     urls = [(f"{base}&{s}",) for s in shards] if shards else [(base,)]
-    # one task per shard: each walks its own next-chain in parallel
-    seed = spark.createDataFrame(urls, "url string").repartition(len(urls))
+    # one slice per shard: each task walks its own next-chain in parallel
+    seed = spark.createDataFrame(spark.sparkContext.parallelize(urls, len(urls)), "url string")
 
     def fetch(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "snapshot_via_http needs the 'requests' package on executors; "
-                "use snapshot_from_bundles over an exported bundle instead"
-            ) from e
-
         from pyspark import TaskContext
 
-        session = requests.Session()
-        if headers:
-            session.headers.update(headers)
+        session = http_session(headers)
         # opt-in debug header tracing which task fetched each chain (the
         # test suite uses it to prove shard-parallelism); OFF by default so
         # production fetches send nothing nonstandard to real servers
@@ -165,20 +216,7 @@ def snapshot_via_http(
             if tc is not None:
                 session.headers["X-Task-Partition"] = str(tc.partitionId())
         for pdf in batches:
-            out = []
-            for url in pdf["url"]:
-                next_url, pages = url, 0
-                while next_url and pages < max_pages:
-                    resp = session.get(next_url)
-                    resp.raise_for_status()
-                    bundle = resp.json()
-                    out.append(__import__("json").dumps(bundle))
-                    pages += 1
-                    next_url = next(
-                        (l.get("url") for l in bundle.get("link", []) if l.get("relation") == "next"),
-                        None,
-                    )
-            yield pd.DataFrame({"bundle_json": out})
+            rows = [row[:-1] for url in pdf["url"] for row in walk_snapshot(session, url, max_pages)]
+            yield pd.DataFrame.from_records(rows, columns=SNAPSHOT_SCHEMA.fieldNames())
 
-    bundles = seed.mapInPandas(fetch, schema="bundle_json string")
-    return snapshot_from_bundles(bundles)
+    return seed.mapInPandas(fetch, schema=SNAPSHOT_SCHEMA)

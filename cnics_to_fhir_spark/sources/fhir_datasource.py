@@ -42,15 +42,16 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from pyspark.sql import types as T
+
+from cnics_to_fhir_spark.sources.fhir import SNAPSHOT_SCHEMA as _BATCH_SCHEMA
+from cnics_to_fhir_spark.sources.fhir import http_session, walk_snapshot
+
 # One schema serves spark.read AND spark.readStream (a DataSource has a
 # single schema()): the batch columns of snapshot_from_bundles plus
 # meta.lastUpdated — in batch it seeds lastupdated_shards / a resume
-# cursor; in streaming it IS the offset.
-SNAPSHOT_DDL = (
-    "resource_type string, id string, subject_ref string, "
-    "identifier_0_system string, identifier_0_value string, "
-    "has_identifier boolean, last_updated string"
-)
+# cursor; in streaming it IS the offset. walk_snapshot yields this order.
+SNAPSHOT_SCHEMA = T.StructType([*_BATCH_SCHEMA.fields, T.StructField("last_updated", T.StringType())])
 
 # snapshot column -> FHIR search parameter (equality pushdown map)
 _PUSHABLE = {
@@ -95,42 +96,7 @@ class PlainFhirSnapshotReader(DataSourceReader):
         return [_Shard(base + extra)]
 
     def read(self, partition: _Shard):
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "fhir_snapshot needs the 'requests' package on executors; "
-                "use sources.fhir.snapshot_from_bundles over an export instead"
-            ) from e
-
-        session = requests.Session()
-        next_url, pages = partition.url, 0
-        while next_url and pages < self.max_pages:
-            resp = session.get(next_url)
-            resp.raise_for_status()
-            bundle = resp.json()
-            for entry in bundle.get("entry") or []:
-                r = entry.get("resource") or {}
-                ident = r.get("identifier")
-                first = ident[0] if ident else {}
-                yield (
-                    r.get("resourceType"),
-                    r.get("id"),
-                    (r.get("subject") or {}).get("reference"),
-                    first.get("system"),
-                    first.get("value"),
-                    ident is not None,
-                    (r.get("meta") or {}).get("lastUpdated"),
-                )
-            pages += 1
-            next_url = next(
-                (
-                    link.get("url")
-                    for link in bundle.get("link") or []
-                    if link.get("relation") == "next"
-                ),
-                None,
-            )
+        return walk_snapshot(http_session(), partition.url, self.max_pages)
 
 
 class FhirSnapshotReader(PlainFhirSnapshotReader):
@@ -161,8 +127,8 @@ class FhirSnapshotDataSource(DataSource):
     def name(cls) -> str:
         return "fhir_snapshot"
 
-    def schema(self) -> str:
-        return SNAPSHOT_DDL
+    def schema(self) -> T.StructType:
+        return SNAPSHOT_SCHEMA
 
     def reader(self, schema) -> PlainFhirSnapshotReader:
         if (self.options.get("pushdown") or "true").lower() == "false":
@@ -211,48 +177,11 @@ class FhirUpdatesStreamReader(SimpleDataSourceStreamReader):
         return {"last_updated": self.since}
 
     def _fetch(self, fragment: str) -> list[tuple]:
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "fhir_snapshot streaming needs the 'requests' package"
-            ) from e
-
-        session = requests.Session()
-        next_url = (
+        url = (
             f"{self.base_url}/{self.resource_type}"
             f"?_format=json&_count={self.page_size}&{fragment}"
         )
-        rows, pages = [], 0
-        while next_url and pages < self.max_pages:
-            resp = session.get(next_url)
-            resp.raise_for_status()
-            bundle = resp.json()
-            for entry in bundle.get("entry") or []:
-                r = entry.get("resource") or {}
-                ident = r.get("identifier")
-                first = ident[0] if ident else {}
-                rows.append(
-                    (
-                        r.get("resourceType"),
-                        r.get("id"),
-                        (r.get("subject") or {}).get("reference"),
-                        first.get("system"),
-                        first.get("value"),
-                        ident is not None,
-                        (r.get("meta") or {}).get("lastUpdated"),
-                    )
-                )
-            pages += 1
-            next_url = next(
-                (
-                    link.get("url")
-                    for link in bundle.get("link") or []
-                    if link.get("relation") == "next"
-                ),
-                None,
-            )
-        return rows
+        return list(walk_snapshot(http_session(), url, self.max_pages))
 
     def read(self, start: dict):
         rows = self._fetch(f"_lastUpdated=gt{start['last_updated']}")

@@ -76,15 +76,19 @@ class _PagingHandler(http.server.BaseHTTPRequestHandler):
         pass
 
 
+def _serve(handler):
+    """Start a threaded server for ``handler`` and point its base_url at it."""
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    handler.base_url = f"http://127.0.0.1:{srv.server_address[1]}"
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
 @pytest.fixture()
 def mock_fhir():
     _PagingHandler.fetching_tasks = {}
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _PagingHandler)
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-    _PagingHandler.base_url = base
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield base
+    srv = _serve(_PagingHandler)
+    yield _PagingHandler.base_url
     srv.shutdown()
 
 
@@ -134,3 +138,108 @@ def test_shard_helpers():
     assert site_shards(["uw"], "urn:cnics") == ["identifier=urn:cnics%7Cuw*"]
     with pytest.raises(ValueError, match="non-empty"):
         lastupdated_shards([])
+
+
+def test_sharded_snapshot_runs_without_a_shuffle(spark, mock_fhir):
+    # the shard seeds are one RDD slice each, so the fetch is a single stage
+    sharded = snapshot_via_http(
+        spark, mock_fhir, "Condition", page_size=5, shards=["site=a", "site=b"]
+    )
+    assert len(sharded.collect()) == 37
+    plan = sharded._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+# Pages covering the row rules' edge cases: a resource without identifier,
+# an empty identifier list, a resource without subject, an entry without
+# resource, and a bundle without entry (page 1).
+EDGE_PAGES = [
+    {
+        "resourceType": "Bundle",
+        "entry": [
+            {"resource": {"resourceType": "Condition", "id": "full",
+                          "subject": {"reference": "Patient/p1"},
+                          "identifier": [{"system": "urn:s", "value": "v1"},
+                                         {"system": "urn:t", "value": "v2"}],
+                          "meta": {"lastUpdated": "2024-01-02T00:00:00Z"}}},
+            {"resource": {"resourceType": "Condition", "id": "no-ident",
+                          "subject": {"reference": "Patient/p2"}}},
+            {"resource": {"resourceType": "Condition", "id": "empty-ident",
+                          "subject": {"reference": "Patient/p3"}, "identifier": []}},
+            {"resource": {"resourceType": "Condition", "id": "no-subject",
+                          "identifier": [{"system": "urn:s", "value": "v4"}]}},
+            {"fullUrl": "urn:uuid:no-resource"},
+        ],
+    },
+    {"resourceType": "Bundle", "total": 0},
+    {
+        "resourceType": "Bundle",
+        "entry": [{"resource": {"resourceType": "Condition", "id": "last",
+                                "subject": {"reference": "Patient/p5"},
+                                "identifier": [{"value": "v5"}]}}],
+    },
+]
+
+
+class _EdgeHandler(http.server.BaseHTTPRequestHandler):
+    base_url: str = ""
+
+    def do_GET(self):
+        page = int(parse_qs(urlparse(self.path).query).get("page", ["0"])[0])
+        bundle = dict(EDGE_PAGES[page])
+        if page + 1 < len(EDGE_PAGES):
+            bundle["link"] = [{"relation": "next",
+                               "url": f"{_EdgeHandler.base_url}/Condition?page={page + 1}"}]
+        body = json.dumps(bundle).encode()
+        self.send_response(200)
+        self.send_header("Content-Type", "application/fhir+json")
+        self.end_headers()
+        self.wfile.write(body)
+
+    def log_message(self, *args):  # silence
+        pass
+
+
+@pytest.fixture()
+def edge_store():
+    srv = _serve(_EdgeHandler)
+    yield _EdgeHandler.base_url
+    srv.shutdown()
+
+
+def _sorted_rows(rows) -> list[tuple]:
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def test_http_rows_match_bundle_parse_on_edge_cases(spark, edge_store):
+    from cnics_to_fhir_spark.sources.fhir import snapshot_from_bundles
+    from cnics_to_fhir_spark.sources.fhir_datasource import (
+        FhirSnapshotDataSource,
+        FhirUpdatesStreamReader,
+    )
+
+    via_http = snapshot_via_http(spark, edge_store, "Condition")
+    bundles = spark.createDataFrame([(json.dumps(p),) for p in EDGE_PAGES], "bundle_json string")
+    via_bundles = snapshot_from_bundles(bundles)
+    assert via_http.columns == via_bundles.columns
+    expected = _sorted_rows(via_bundles.collect())
+    assert _sorted_rows(via_http.collect()) == expected
+    assert len(expected) == 6
+    by_id = {r[1]: r for r in expected}
+    assert by_id["full"][3:6] == ("urn:s", "v1", True)  # identifier[0] only
+    assert by_id["no-ident"][3:6] == (None, None, False)
+    assert by_id["empty-ident"][3:6] == (None, None, True)  # the array exists
+    assert by_id["no-subject"][2] is None
+    assert by_id[None] == (None,) * 5 + (False,)  # the entry without resource
+
+    # the data source and the stream reader walk the same pages the same way
+    spark.dataSource.register(FhirSnapshotDataSource)
+    via_ds = (
+        spark.read.format("fhir_snapshot").option("url", edge_store)
+        .option("pushdown", "false").load()
+    )
+    assert _sorted_rows(via_ds.drop("last_updated").collect()) == expected
+    stream = FhirUpdatesStreamReader({"url": edge_store})
+    polled = stream._fetch("_lastUpdated=gt1970-01-01T00:00:00Z")
+    assert _sorted_rows(r[:-1] for r in polled) == expected
+    assert {r[-1] for r in polled} == {None, "2024-01-02T00:00:00Z"}
